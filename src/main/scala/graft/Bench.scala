@@ -438,9 +438,10 @@ object Bench {
     // family subtotals but NO per-query map ("per_query":{} from a clean
     // rc-0 run). The LAST line is now the one with "queries":{...}; the
     // compact line still prints (metric-keyed consumers of
-    // "total_compact" are unaffected by its position).
-    println(compact)
-    println(full)
+    // "total_compact" are unaffected by its position). Both lines go out
+    // in ONE write, so a kill between them cannot leave only the compact
+    // line.
+    print(compact + "\n" + full + "\n")
     System.out.flush()
     true
   }

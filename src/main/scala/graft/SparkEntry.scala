@@ -166,12 +166,10 @@ object SparkEntry {
     * closes over the real codec END TO END with the write side
     * distributed. (Local mode writes to a shared local dir; on a cluster
     * the target is a DFS path — the per-task upload is unchanged.) */
-  private val exportMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val exportMemo = new graft.sources.SessionMemo[String]
 
   private def sstableExport(s: SparkSession, d: String): DataFrame = {
-    val memoKey = s"${graft.sources.PlanCache.sessionKey(s)}|$d"
-    val path = exportMemo.computeIfAbsent(memoKey, _ => {
+    val path = exportMemo(s, d) {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-export")).toString
       graft.sources.Fixtures.cells(s, d)
@@ -184,7 +182,7 @@ object SparkEntry {
         .option("path", out).option("compressed", "true")
         .mode("append").save()
       out
-    })
+    }
     cassandraRollup(s, path, cassSplitBytes(path))
   }
 
@@ -198,16 +196,14 @@ object SparkEntry {
     * must match the oracle's direct derivation — content fidelity, not
     * just length fidelity. Value retention is pruning-gated: only a scan
     * that asks for `value` pays for the bytes. */
-  private val valueExportMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val valueExportMemo = new graft.sources.SessionMemo[String]
 
   /** The VALUE-BEARING real sstable set (round 10, shared by
     * q163/q166/q167): every live cell's stored bytes are the
     * oracle-recomputable payload string 'v<key>:<clustering>:<ts>',
     * written once per session through the DSv2 sink. */
   private def ensureValueExport(s: SparkSession, d: String): String = {
-    val memoKey = s"${graft.sources.PlanCache.sessionKey(s)}|$d"
-    valueExportMemo.computeIfAbsent(memoKey, _ => {
+    valueExportMemo(s, d) {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-value-export")).toString
       graft.sources.Fixtures.cells(s, d)
@@ -223,7 +219,7 @@ object SparkEntry {
         .option("path", out).option("compressed", "true")
         .mode("append").save()
       out
-    })
+    }
   }
 
   private def valuePassthrough(s: SparkSession, d: String): DataFrame = {

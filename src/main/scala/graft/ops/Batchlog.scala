@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.commitlog.CommitLogFormat
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
@@ -38,6 +39,8 @@ import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
   * artifacts read one-task-per-file; apply/replay are clustered sink
   * writes; verification is the one combine-enabled LWW exchange. */
 object Batchlog {
+
+  private val memo = new SessionMemo[String]
 
   /** Batched workload: events at/after this timestamp (fixture day
     * 2300). */
@@ -78,7 +81,7 @@ object Batchlog {
   /** The crash-time state: the applied table file + the surviving
     * batchlog files, under one dir (session-memoized). */
   def ensureCrash(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|batchlog-crash") {
+    memo(spark, s"$dir|batchlog-crash") {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-batchlog")).toString
       val w = batched(spark, dir)
@@ -112,7 +115,7 @@ object Batchlog {
   /** Replay every surviving batchlog file through the sink
     * (session-memoized): full batches, prefix duplicates included. */
   def ensureReplayed(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|batchlog-replay") {
+    memo(spark, s"$dir|batchlog-replay") {
       val crash = ensureCrash(spark, dir)
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-batchlog-rx"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{DataDb, DataDbScan}
 
 /** Node BOOTSTRAP, executed end to end (round 16) — the other half of
@@ -48,27 +49,12 @@ object Bootstrap {
     * predecessor — the pre-change primary of both its eighths). */
   def sourceOf(p: Int): Int = (p - 1) / 2
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val memo = new SessionMemo[String]
 
   /** Stream each new node's eighths from the pre-change files; one
     * real bootstrapped sstable per new node (session-memoized). */
-  def ensureBootstrapped(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|boot"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureBootstrapped(spark: SparkSession, dir: String): String =
+    memo(spark, s"$dir|boot")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): String = {
     val out = graft.sources.TempDirs.register(

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** sstableloader, executed end to end (round 16) — the bulk-load tool
@@ -73,27 +74,12 @@ object BulkLoad {
         (regexp_extract(col("sstable_id"), "nb-(\\d+)-big", 1)
           .cast("long") - 1L).cast("string")))
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val memo = new SessionMemo[String]
 
   /** Stream the q206 set into the ring: one real received sstable per
     * node under the returned dir (session-memoized). */
-  def ensureLoaded(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|load"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureLoaded(spark: SparkSession, dir: String): String =
+    memo(spark, s"$dir|load")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): String = {
     val inPath = CassandraDataFixture.ensureUcsFiles(spark, dir)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{DataDb, DataDbScan}
 
 /** `nodetool cleanup`, executed end to end (round 16) — the topology-
@@ -58,28 +59,13 @@ object Cleanup {
   def droppedEighths(n: Int): Set[Long] =
     Set(((2 * n + 1) % 8).toLong, ((2 * n + 6) % 8).toLong)
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val memo = new SessionMemo[String]
 
   /** Rewrite every loaded node file without its foreign ranges; one
     * real cleaned sstable per node under the returned dir
     * (session-memoized). */
-  def ensureCleaned(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|cleanup"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureCleaned(spark: SparkSession, dir: String): String =
+    memo(spark, s"$dir|cleanup")(build(spark, dir))
 
   private def loadedEvents(spark: SparkSession, dir: String): DataFrame =
     DataDb.cells(spark, BulkLoad.ensureLoaded(spark, dir),

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.commitlog.CommitLogFormat
 import graft.sources.datadb.{DataDb, DataDbScan}
 
@@ -47,6 +47,8 @@ import graft.sources.datadb.{DataDb, DataDbScan}
   * fixture staging. */
 object CommitLog {
 
+  private val memo = new SessionMemo[String]
+
   /** PITR bound (fixture day 1200): mid-corpus, so both the replayed
     * and the discarded halves are non-trivial. */
   val RestorePointUs: Long = 1200L * 86400000000L
@@ -63,7 +65,7 @@ object CommitLog {
     * byte-identical to the old driver-sequential layout, with no
     * corpus-scale collect. */
   def ensureWal(spark: SparkSession, dir: String): String = {
-    val wal = OpMemo.memoized(spark, s"$dir|wal") {
+    val wal = memo(spark, s"$dir|wal") {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-commitlog")).toString
       import spark.implicits._
@@ -251,7 +253,7 @@ object CommitLog {
     * time, before the reconcile exchange. */
   private def ensureFlushed(spark: SparkSession, dir: String,
       boundUs: Option[Long]): String =
-    OpMemo.memoized(spark, s"$dir|flush|${boundUs.getOrElse(-1L)}") {
+    memo(spark, s"$dir|flush|${boundUs.getOrElse(-1L)}") {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-clreplay")).toString
       val mu0 = mutations(spark, dir)
@@ -368,7 +370,7 @@ object CommitLog {
     sharedCdc(spark, dir)
 
   private def sharedCdc(spark: SparkSession, dir: String): DataFrame = {
-    val resultPath = OpMemo.memoized(spark, s"$dir|cdc") {
+    val resultPath = memo(spark, s"$dir|cdc") {
       val wal = ensureWal(spark, dir)
       val segFiles = Option(new java.io.File(wal).listFiles())
         .getOrElse(Array.empty[java.io.File])

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** REAL compaction, end to end (round 10): read the real compressed
@@ -121,69 +121,33 @@ object Compaction {
     }.sum
   }
 
-  private val shardsMemo =
-    new java.util.HashMap[String, (SparkSession, Slot[Long])]()
+  private val shardsMemo = new SessionMemo[Long]
 
   /** Session-memoized shard count per INPUT set: the volume model is a
     * property of the input, not of the gc parameter, so compactions at
     * several cutoffs (q164's two, the CLI's `-g`) share ONE sizing
-    * pass instead of re-scanning per cutoff. Entries are swept with
-    * their session (the fixture-memo pattern) so closed sessions don't
-    * accumulate for the JVM lifetime. The memo lock covers only
-    * lookup/sweep/insert; the sizing SCAN runs outside it on the
-    * caller's [[Slot]], so distinct inputs size concurrently. */
+    * pass instead of re-scanning per cutoff. The sizing SCAN runs on
+    * the key's own build slot, so distinct inputs size concurrently. */
   def memoizedShards(spark: SparkSession, inPath: String)(
-      inputBytes: => Long): Long = {
-    val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$inPath"
-    val slot = shardsMemo.synchronized {
-      sweep(shardsMemo)
-      val hit = shardsMemo.get(k)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => outputShards(inputBytes))
-        shardsMemo.put(k, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      inputBytes: => Long): Long =
+    shardsMemo(spark, inPath)(outputShards(inputBytes))
 
-  private def sweep[V](m: java.util.HashMap[String, (SparkSession, V)])
-      : Unit = {
-    val it = m.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
-
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val memo = new SessionMemo[String]
 
   private val ChkMod = 1000003L
 
   /** Compact the real-format compressed set of `dir` into
     * [[outputShards]]-many real sstables under a session-memoized temp
-    * dir; returns the output directory. The memo lock covers only
-    * lookup/sweep/insert — the multi-minute build (fixture generation,
-    * sizing scan, merge job, sink write) runs on the caller's [[Slot]],
-    * so compactions of DISTINCT dirs/cutoffs/sessions build concurrently
-    * while same-key callers still share one build. */
+    * dir; returns the output directory. The multi-minute build (fixture
+    * generation, sizing scan, merge job, sink write) runs on the key's
+    * own [[SessionMemo]] slot, so compactions of DISTINCT
+    * dirs/cutoffs/sessions build concurrently while same-key callers
+    * still share one build. */
   def ensureCompacted(spark: SparkSession, dir: String,
       gcBeforeS: Long = Fixtures.GcBeforeS,
-      sidecarSized: Boolean = false): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|" +
-      s"$gcBeforeS|$sidecarSized"
-    val slot = memo.synchronized {
-      sweep(memo)
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir, gcBeforeS, sidecarSized))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      sidecarSized: Boolean = false): String =
+    memo(spark, s"$dir|$gcBeforeS|$sidecarSized")(
+      build(spark, dir, gcBeforeS, sidecarSized))
 
   private def build(spark: SparkSession, dir: String,
       gcBeforeS: Long, sidecarSized: Boolean): String = {
@@ -293,13 +257,4 @@ object Compaction {
         sum(col("size_bytes") % ChkMod).as("value_sum"))
       .orderBy("sstable_id")
   }
-}
-
-/** Per-key build slot for the session memos: `lazy val` acts as a
-  * per-key latch, so a memo's lock covers only lookup/sweep/insert
-  * while DISTINCT keys build concurrently and same-key callers share
-  * one build. A failed build rethrows to every waiter and re-attempts
-  * on the next access (Scala lazy-val semantics). */
-private[ops] final class Slot[A](thunk: () => A) {
-  lazy val value: A = thunk()
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{DataDb, DataDbScan}
 
 /** `nodetool decommission`, executed end to end (round 16) — the ring
@@ -52,27 +53,12 @@ object Decommission {
 
   private val M = 1000003L
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val memo = new SessionMemo[String]
 
   /** Stream the leaving node's ranges to their new replicas; one real
     * sstable per direction under the returned dir (session-memoized). */
-  def ensureStreamed(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|decom"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureStreamed(spark: SparkSession, dir: String): String =
+    memo(spark, s"$dir|decom")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): String = {
     val out = graft.sources.TempDirs.register(

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbFormat, DataDbScan}
 
 /** DELETION-SHADOWING compaction, executed end to end over the FEATURE
@@ -58,39 +59,16 @@ object FeatureCompaction {
     * (D2 + [0,40)/[0,50)): those bisect; row deletions all purge. */
   val GcB: Long = CassandraDataFixture.FeatureD2 + 20L
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
-
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[String]
 
   /** Compact the feature set of `dir` under the shadow hierarchy at
     * `gcBeforeS` into volume-adaptively-many real feature-schema
-    * sstables; returns the output directory (session-memoized, swept
-    * with the session like the fixture memos). Lock scope is
-    * lookup/sweep/insert only — the build runs on the caller's
-    * [[Slot]], so the two gc cutoffs (and other inputs) build
-    * concurrently. */
+    * sstables; returns the output directory (session-memoized: the two
+    * gc cutoffs, and other inputs, build concurrently). */
   def ensureCompacted(spark: SparkSession, dir: String,
-      gcBeforeS: Long, copartitioned: Boolean = false): String = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|feat|" +
-        s"$gcBeforeS|$copartitioned"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir, gcBeforeS, copartitioned))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      gcBeforeS: Long, copartitioned: Boolean = false): String =
+    memo(spark, s"$dir|feat|$gcBeforeS|$copartitioned")(
+      build(spark, dir, gcBeforeS, copartitioned))
 
   private def build(spark: SparkSession, dir: String,
       gcBeforeS: Long, copartitioned: Boolean): String = {

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.commitlog.CommitLogFormat
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
@@ -37,6 +38,8 @@ import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
   * reading them is one task per file; the flush is the sink's one
   * clustered exchange; digests are narrow commutative aggregates. */
 object Hints {
+
+  private val memo = new SessionMemo[String]
 
   /** The down node. */
   val Target = 3L
@@ -77,7 +80,7 @@ object Hints {
   /** The target's outage-gapped sstable + the coordinators' hint
     * files, under one dir (session-memoized). */
   def ensureOutage(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|hints-outage") {
+    memo(spark, s"$dir|hints-outage") {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-hints")).toString
       val held = corpusHeld(spark, dir)
@@ -119,7 +122,7 @@ object Hints {
   /** Replay the hint files through the sink: one received sstable per
     * coordinator (session-memoized). */
   def ensureReplayed(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|hints-replay") {
+    memo(spark, s"$dir|hints-replay") {
       val outage = ensureOutage(spark, dir)
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-hints-rx")).toString

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
-import graft.sources.Tables
+import graft.sources.{SessionMemo, Tables}
 
 /** Graph-based ANN: partition-local HNSW graphs (Malkov & Yashunin,
   * "Efficient and robust approximate nearest neighbor search using
@@ -251,8 +251,7 @@ object Hnsw {
   private[ops] case class IdxRow(shard: Int, vec_id: Long, level: Int,
       layer: Int, neighbors: Seq[Long], qv: Seq[Long], norm2: Long)
 
-  private val indexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val indexMemo = new SessionMemo[String]
 
   /** Serialize one built shard graph as (node, layer) adjacency rows. */
   private def idxRowsOf(shard: Int, g: Graph): Iterator[IdxRow] = {
@@ -316,15 +315,9 @@ object Hnsw {
     * IVF-PQ index). Nothing passes through the driver; each task writes
     * its own shard's adjacency. */
   def ensureHnswIndex(spark: SparkSession, dir: String, nQueries: Int = 8,
-      shards: Int = 4, m: Int = 8, efC: Int = 64): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|hnswidx" +
-      s"|$nQueries|$shards|$m|$efC"
-    val hit = indexMemo.get(key)
-    if (hit != null) return hit
-    val out = buildHnswIndex(spark, dir, nQueries, shards, m, efC)
-    indexMemo.put(key, out)
-    out
-  }
+      shards: Int = 4, m: Int = 8, efC: Int = 64): String =
+    indexMemo(spark, s"$dir|hnswidx|$nQueries|$shards|$m|$efC")(
+      buildHnswIndex(spark, dir, nQueries, shards, m, efC))
 
   /** INCREMENTAL insertion into a persisted index (VERDICT r9 ask #7):
     * each shard's graph is reloaded from its adjacency rows, the batch's
@@ -402,9 +395,7 @@ object Hnsw {
   def hnswIngestedTopK(spark: SparkSession, dir: String, nQueries: Int = 8,
       k: Int = 5, shards: Int = 4, m: Int = 8, efC: Int = 64,
       efSearch: Int = 128): DataFrame = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|hnswing" +
-      s"|$nQueries|$shards|$m|$efC"
-    val path = Option(indexMemo.get(key)).getOrElse {
+    val path = indexMemo(spark, s"$dir|hnswing|$nQueries|$shards|$m|$efC") {
       val maxId = Similarity.quantized(spark, dir)
         .agg(max(col("vec_id"))).head.getLong(0)
       val split = (nQueries.toLong + maxId) / 2
@@ -413,9 +404,7 @@ object Hnsw {
       val arrivals = Similarity.quantized(spark, dir)
         .where(col("vec_id") >= split)
         .select(col("vec_id"), col("qv"), col("norm2"))
-      val ingested = hnswIndexInsert(spark, prefix, arrivals, shards, m, efC)
-      indexMemo.put(key, ingested)
-      ingested
+      hnswIndexInsert(spark, prefix, arrivals, shards, m, efC)
     }
     hnswSearchIndex(spark, dir, path, nQueries, k, m, efC, efSearch)
   }

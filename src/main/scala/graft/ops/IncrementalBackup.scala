@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** Incremental backups, executed end to end (round 16) — the other
@@ -29,13 +30,15 @@ import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
   * corpus size; restores are parallel scans of the linked set. */
 object IncrementalBackup {
 
+  private val memo = new SessionMemo[String]
+
   private val M = 1000003L
 
 
   /** Link the post-snapshot flushes (the q221 recovery output) into a
     * backups dir (session-memoized). */
   def ensureBackups(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|incbackup") {
+    memo(spark, s"$dir|incbackup") {
       val flushes = CommitLog.flushedDir(spark, dir)
       val backups = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-backups"))

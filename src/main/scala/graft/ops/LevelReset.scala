@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.statsdb.CassandraStatsFormat
 
 /** `sstablelevelreset` (round 14) — the Cassandra recovery tool that
@@ -20,31 +21,12 @@ import graft.sources.statsdb.CassandraStatsFormat
   * production scan's event count is unchanged. */
 object LevelReset {
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
-
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[String]
 
   /** The leveled set copied with every Statistics.db level reset to 0;
     * returns the rewritten directory (session-memoized). */
-  def ensureReset(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|lvlreset"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureReset(spark: SparkSession, dir: String): String =
+    memo(spark, s"$dir|lvlreset")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): String = {
     val inPath = graft.sources.datadb.CassandraDataFixture

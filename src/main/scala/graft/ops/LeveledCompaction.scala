@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** LEVELED compaction (Cassandra LCS), executed end to end (round 13) —
@@ -86,31 +86,11 @@ object LeveledCompaction {
     (l0, partners.sortBy(_.firstKey), passthrough)
   }
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
-
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[String]
 
   def ensureCompacted(spark: SparkSession, dir: String,
-      gcBeforeS: Long = Fixtures.GcBeforeS): String = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|lcs|$gcBeforeS"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir, gcBeforeS))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      gcBeforeS: Long = Fixtures.GcBeforeS): String =
+    memo(spark, s"$dir|lcs|$gcBeforeS")(build(spark, dir, gcBeforeS))
 
   // light-row-work scans (the per-unit rollup sums): fixed split cap —
   // see DataDbScan.LightRowWorkSplit. Also feeds the session-memoized
@@ -251,21 +231,9 @@ object LeveledCompaction {
     * a session-memoized dir; file copies for the carried sets, a real
     * sink write for the new flushes. */
   def ensureSecondRoundInput(spark: SparkSession, dir: String,
-      gcBeforeS: Long = Fixtures.GcBeforeS): String = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|lcs2in|$gcBeforeS"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => buildSecondRoundInput(spark, dir, gcBeforeS))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      gcBeforeS: Long = Fixtures.GcBeforeS): String =
+    memo(spark, s"$dir|lcs2in|$gcBeforeS")(
+      buildSecondRoundInput(spark, dir, gcBeforeS))
 
   private def buildSecondRoundInput(spark: SparkSession, dir: String,
       gcBeforeS: Long): String = {
@@ -305,23 +273,11 @@ object LeveledCompaction {
   /** The second round's compaction output (level-1-stamped, generations
     * from [[OutGenBase2]]), session-memoized. */
   def ensureSecondCompacted(spark: SparkSession, dir: String,
-      gcBeforeS: Long = Fixtures.GcBeforeS): String = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|lcs2|$gcBeforeS"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => buildFrom(spark,
-          ensureSecondRoundInput(spark, dir, gcBeforeS), gcBeforeS,
-          OutGenBase2))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      gcBeforeS: Long = Fixtures.GcBeforeS): String =
+    memo(spark, s"$dir|lcs2|$gcBeforeS")(
+      buildFrom(spark,
+        ensureSecondRoundInput(spark, dir, gcBeforeS), gcBeforeS,
+        OutGenBase2))
 
   /** q175: LCS RE-INGESTION — the proof that the compaction's outputs
     * are first-class citizens of its own layout. Round 2 selects over

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** MULTI-LEVEL LCS (round 14) — the promotion machinery that closes the
@@ -58,14 +58,7 @@ object LeveledPromotion {
   final case class Chain(p1Out: String, flushDir: String, r2Out: String,
       finalDir: String)
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[Chain])]()
-
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[Chain]
 
   private def scanOf(spark: SparkSession, p: String): DataFrame =
     DataDb.cells(spark, p, format = DataDbScan.FormatCassandra)
@@ -187,21 +180,8 @@ object LeveledPromotion {
 
   /** The chain's four states + the final dir, session-memoized. */
   def ensureChain(spark: SparkSession, dir: String,
-      gcBeforeS: Long = Fixtures.GcBeforeS): Chain = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|lcs-multi|$gcBeforeS"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir, gcBeforeS))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      gcBeforeS: Long = Fixtures.GcBeforeS): Chain =
+    memo(spark, s"$dir|lcs-multi|$gcBeforeS")(build(spark, dir, gcBeforeS))
 
   private def assemble(parts: (String, String => Boolean)*)
       : java.nio.file.Path = {

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** Materialized views, executed end to end (round 16) — Cassandra's
@@ -34,6 +35,8 @@ import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
   * base is never scanned — the covered-read contract); digests are
   * narrow commutative aggregates over the probed partitions only. */
 object MaterializedView {
+
+  private val memo = new SessionMemo[String]
 
   /** The maintenance window: base writes at/after this timestamp
     * (fixture day 2300) arrive AFTER the initial view build. */
@@ -79,7 +82,7 @@ object MaterializedView {
     * value, then the window's deltas as their own file
     * (session-memoized). */
   def ensureView(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|mview") {
+    memo(spark, s"$dir|mview") {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-mview")).toString
       val inPath = CassandraDataFixture.ensureFiles(spark, dir,

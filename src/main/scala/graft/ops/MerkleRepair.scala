@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** Merkle-tree descent, executed end to end (round 16) — the LOG-COST
@@ -36,6 +37,8 @@ import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
   * memory model: Merkle trees live on the repair coordinator. */
 object MerkleRepair {
 
+  private val memo = new SessionMemo[String]
+
   /** Tree depth: 2^Depth = 64 leaves. */
   val Depth = 6
 
@@ -63,7 +66,7 @@ object MerkleRepair {
   /** A (full) and B (single-leaf-gapped) under one dir
     * (session-memoized). */
   def ensureReplicas(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|merkle") {
+    memo(spark, s"$dir|merkle") {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-merkle")).toString
       val inPath = CassandraDataFixture.ensureFiles(spark, dir,

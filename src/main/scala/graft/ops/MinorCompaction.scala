@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** SIZE-TIERED MINOR compaction, executed end to end (round 13) — the
@@ -77,33 +77,13 @@ object MinorCompaction {
     64 - java.lang.Long.numberOfLeadingZeros(x)
   }
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
-
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[String]
 
   /** Compact the tiered set's selected tiers into one real sstable per
     * tier under a session-memoized temp dir; returns the output dir. */
   def ensureCompacted(spark: SparkSession, dir: String,
-      gcBeforeS: Long = Fixtures.GcBeforeS): String = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|minor|$gcBeforeS"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir, gcBeforeS))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      gcBeforeS: Long = Fixtures.GcBeforeS): String =
+    memo(spark, s"$dir|minor|$gcBeforeS")(build(spark, dir, gcBeforeS))
 
   /** The production scan of the tiered input set, ids normalized back to
     * the fixture's sst-<n> names. */
@@ -113,30 +93,15 @@ object MinorCompaction {
         (regexp_extract(col("sstable_id"), "nb-(\\d+)-big", 1)
           .cast("long") - 1L).cast("string")))
 
-  private val tierMemo = new java.util.HashMap[String,
-    (SparkSession, Slot[Seq[(String, Int, Boolean)]])]()
+  private val tierMemo = new SessionMemo[Seq[(String, Int, Boolean)]]
 
   /** Driver-side tier table: (sstable_id, tier, selected) off one pruned
     * single-column aggregate — O(#sstables) rows. Session-memoized
     * (round 14): build + roundtrip both consult it, and it is a pure
     * function of the input set, so the selection aggregate runs once. */
   def tierTable(spark: SparkSession, dir: String)
-      : Seq[(String, Int, Boolean)] = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|tiers"
-    val slot = tierMemo.synchronized {
-      val it = tierMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = tierMemo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => buildTierTable(spark, dir))
-        tierMemo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      : Seq[(String, Int, Boolean)] =
+    tierMemo(spark, s"$dir|tiers")(buildTierTable(spark, dir))
 
   private def buildTierTable(spark: SparkSession, dir: String)
       : Seq[(String, Int, Boolean)] = {

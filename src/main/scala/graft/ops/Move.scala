@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{DataDb, DataDbScan}
 
 /** `nodetool move`, executed end to end (round 16) — the token
@@ -37,6 +38,8 @@ import graft.sources.datadb.{DataDb, DataDbScan}
   * blast radius). */
 object Move {
 
+  private val memo = new SessionMemo[String]
+
   /** The moving node. */
   val Mover = 1
 
@@ -68,9 +71,9 @@ object Move {
 
   /** Execute the move's data motion: the two gained-eighth streams and
     * the two losers' local rewrites, real sstables under the returned
-    * dir (session-memoized via [[OpMemo]]). */
+    * dir (session-memoized via [[SessionMemo]]). */
   def ensureMoved(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|move")(build(spark, dir))
+    memo(spark, s"$dir|move")(build(spark, dir))
 
   private def loadedEvents(spark: SparkSession, dir: String): DataFrame =
     DataDb.cells(spark, BulkLoad.ensureLoaded(spark, dir),

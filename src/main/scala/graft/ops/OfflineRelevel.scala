@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.statsdb.CassandraStatsFormat
 
 /** `sstableofflinerelevel`, executed end to end (round 16) — the
@@ -62,29 +63,14 @@ object OfflineRelevel {
     }.sortBy(_.sstableId)
   }
 
-  private val memo = new java.util.HashMap[String,
-    (SparkSession, Slot[(String, Seq[Assign])])]()
+  private val memo = new SessionMemo[(String, Seq[Assign])]
 
   /** Relevel the LEVEL-RESET leveled set: plan off its sidecars + one
     * volume aggregate, rewrite every Statistics.db with the new level;
     * returns (releveled dir, the plan). Session-memoized. */
   def ensureReleveled(spark: SparkSession, dir: String)
-      : (String, Seq[Assign]) = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|relevel"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot[(String, Seq[Assign])](() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      : (String, Seq[Assign]) =
+    memo(spark, s"$dir|relevel")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String)
       : (String, Seq[Assign]) = {

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** Blocking read repair, executed end to end (round 16) — the
@@ -38,6 +39,8 @@ import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
   * outside the read set until the verification pass (which a real
   * cluster never runs — it IS the oracle's job here). */
 object ReadRepair {
+
+  private val memo = new SessionMemo[String]
 
   /** B's outage: every event at/after this timestamp is missing
     * (fixture day 2200 — late enough that most partitions are clean,
@@ -75,7 +78,7 @@ object ReadRepair {
   /** A's (full) and B's (stale-gapped) files under one dir
     * (session-memoized). */
   def ensureReplicas(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|rr-replicas") {
+    memo(spark, s"$dir|rr-replicas") {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-readrepair")).toString
       val ev = corpus(spark, dir)
@@ -107,7 +110,7 @@ object ReadRepair {
     * staleness predicate): mismatched read partitions' A-events
     * anti-joined against B (session-memoized). */
   def ensurePatched(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|rr-patch") {
+    memo(spark, s"$dir|rr-patch") {
       val reps = ensureReplicas(spark, dir)
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-rr-patch")).toString

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{DataDb, DataDbScan}
 
 /** `nodetool rebuild`, executed end to end (round 16) — the MULTI-DC
@@ -31,6 +32,8 @@ import graft.sources.datadb.{DataDb, DataDbScan}
   * are narrow commutative aggregates. */
 object Rebuild {
 
+  private val memo = new SessionMemo[String]
+
   /** DC2 nodes and their per-DC ownership (NTS RF=1: contiguous
     * halves). */
   val Dc2Owns: Seq[(Long, Long)] = Seq( // (dc2 node, quarter)
@@ -46,9 +49,9 @@ object Rebuild {
   private val M = 1000003L
 
   /** Stream DC2's four rebuild sessions; one real sstable per session
-    * under the returned dir (session-memoized via [[OpMemo]]). */
+    * under the returned dir (session-memoized via [[SessionMemo]]). */
   def ensureRebuilt(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|rebuild")(build(spark, dir))
+    memo(spark, s"$dir|rebuild")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): String = {
     val out = graft.sources.TempDirs.register(

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{DataDb, DataDbScan}
 
 /** `nodetool removenode`, executed end to end (round 16) — the
@@ -32,6 +33,8 @@ import graft.sources.datadb.{DataDb, DataDbScan}
   * sink; digests are narrow commutative aggregates. */
 object RemoveNode {
 
+  private val memo = new SessionMemo[String]
+
   /** The dead node (cannot stream). */
   val Dead = 3
 
@@ -48,9 +51,9 @@ object RemoveNode {
 
   /** Stream each under-replicated quarter from its surviving replica
     * to its new holder; one real sstable per direction under the
-    * returned dir (session-memoized via [[OpMemo]]). */
+    * returned dir (session-memoized via [[SessionMemo]]). */
   def ensureStreamed(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|rmnode")(build(spark, dir))
+    memo(spark, s"$dir|rmnode")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): String = {
     val out = graft.sources.TempDirs.register(

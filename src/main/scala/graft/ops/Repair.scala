@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 import graft.sources.statsdb.CassandraStatsFormat
 
@@ -33,14 +34,7 @@ object Repair {
     * replays it). */
   val RepairedAtMs = 1600000000000L
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
-
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[String]
 
   /** The base compressed set copied with every Statistics.db stamped
     * repaired; returns the marked directory (session-memoized). */
@@ -60,20 +54,8 @@ object Repair {
       PartialRepairedGens.contains)
 
   private def ensureMarked(spark: SparkSession, dir: String, tag: String,
-      markGen: Long => Boolean): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|$tag"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir, markGen))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      markGen: Long => Boolean): String =
+    memo(spark, s"$dir|$tag")(build(spark, dir, markGen))
 
   private def build(spark: SparkSession, dir: String,
       markGen: Long => Boolean): String =
@@ -133,21 +115,10 @@ object Repair {
     * (e.g. data resurrection suspected under a bad repair): the next
     * incremental digest re-verifies exactly the reset files.
     * Session-memoized. */
-  def ensureUnrepairedReset(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|reset"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => markDir(ensureRepaired(spark, dir),
-          ResetGens.contains, stampMs = 0L))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureUnrepairedReset(spark: SparkSession, dir: String): String =
+    memo(spark, s"$dir|reset")(
+      markDir(ensureRepaired(spark, dir),
+        ResetGens.contains, stampMs = 0L))
 
   /** q209: the repairedset cycle — the fully-marked node plans ZERO
     * incremental reads; after the reset, the digest reads EXACTLY the
@@ -172,8 +143,7 @@ object Repair {
     * write). */
   val FlushShiftUs = 2000000000L
 
-  private val loopMemo = new java.util.HashMap[String,
-    (SparkSession, Slot[(String, String)])]()
+  private val loopMemo = new SessionMemo[(String, String)]
 
   /** The CONTINUOUS incremental-repair loop's two states (round 15):
     * a fully-marked node receives one fresh flush (the
@@ -182,49 +152,35 @@ object Repair {
     * flush itself is marked once its ranges verify. Session-memoized;
     * returns (flushed state, marked state). */
   def ensureIncrementalLoop(spark: SparkSession, dir: String)
-      : (String, String) = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|increloop"
-    val slot = loopMemo.synchronized {
-      val it = loopMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = loopMemo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot[(String, String)](() => {
-          val marked = ensureRepaired(spark, dir)
-          val state = graft.sources.TempDirs.register(
-            java.nio.file.Files.createTempDirectory("graft-repair-loop"))
-          Option(new java.io.File(marked).listFiles())
-            .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
-            .foreach { f =>
-              java.nio.file.Files.copy(f.toPath,
-                state.resolve(f.getName))
-              ()
-            }
-          val base = CassandraDataFixture.ensureFiles(spark, dir,
-            compressed = true)
-          DataDb.cells(spark, base, format = DataDbScan.FormatCassandra)
-            .where(pmod(col("key"), lit(FlushSliverMod)) === 0L)
-            .withColumn("timestamp_us",
-              col("timestamp_us") + FlushShiftUs)
-            .select(
-              lit(s"sst-${FlushGen - 1}").as("sstable_id"),
-              col("key"), col("clustering"), col("column_name"),
-              col("kind"), col("timestamp_us"), col("ttl_s"),
-              col("local_deletion_time_s"),
-              col("is_tombstone"), col("is_expiring"), col("size_bytes"))
-            .write.format("sstable-data")
-            .option("path", state.toString).option("compressed", "true")
-            .mode("append").save()
-          (state.toString, markDir(state.toString))
-        })
-        loopMemo.put(key, (spark, s))
-        s
-      }
+      : (String, String) =
+    loopMemo(spark, s"$dir|increloop") {
+      val marked = ensureRepaired(spark, dir)
+      val state = graft.sources.TempDirs.register(
+        java.nio.file.Files.createTempDirectory("graft-repair-loop"))
+      Option(new java.io.File(marked).listFiles())
+        .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
+        .foreach { f =>
+          java.nio.file.Files.copy(f.toPath,
+            state.resolve(f.getName))
+          ()
+        }
+      val base = CassandraDataFixture.ensureFiles(spark, dir,
+        compressed = true)
+      DataDb.cells(spark, base, format = DataDbScan.FormatCassandra)
+        .where(pmod(col("key"), lit(FlushSliverMod)) === 0L)
+        .withColumn("timestamp_us",
+          col("timestamp_us") + FlushShiftUs)
+        .select(
+          lit(s"sst-${FlushGen - 1}").as("sstable_id"),
+          col("key"), col("clustering"), col("column_name"),
+          col("kind"), col("timestamp_us"), col("ttl_s"),
+          col("local_deletion_time_s"),
+          col("is_tombstone"), col("is_expiring"), col("size_bytes"))
+        .write.format("sstable-data")
+        .option("path", state.toString).option("compressed", "true")
+        .mode("append").save()
+      (state.toString, markDir(state.toString))
     }
-    slot.value
-  }
 
   /** q196: the STEADY-STATE repair loop — what a node actually runs
     * forever: after a full repair marks everything (q174/q184/q192),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** THREE-REPLICA repair with a per-leaf DIRECTION MATRIX (round 15) —
@@ -76,29 +77,10 @@ object RepairMatrix {
       pre: Seq[Map[Long, (Long, Long)]], uni: Map[Long, (Long, Long)],
       srcFor: Map[(Long, Int), Int], intoDirs: Seq[String])
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[Session])]()
+  private val memo = new SessionMemo[Session]
 
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
-
-  def ensureSession(spark: SparkSession, dir: String): Session = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|repair3"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureSession(spark: SparkSession, dir: String): Session =
+    memo(spark, s"$dir|repair3")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): Session = {
     val paths = (0 until Replicas).map(r =>
@@ -147,46 +129,31 @@ object RepairMatrix {
     Session(paths, pre, uni, srcFor, intoDirs)
   }
 
-  private val cycleMemo = new java.util.HashMap[String,
-    (SparkSession, Slot[Seq[(String, String)]])]()
+  private val cycleMemo = new SessionMemo[Seq[(String, String)]]
 
   /** Per replica: (converged-but-unmarked dir, the same set with every
     * Statistics.db stamped repairedAt) — the 3-replica session's
     * closing act (q184's two-replica twin), session-memoized. */
   def ensureCycle(spark: SparkSession, dir: String)
-      : Seq[(String, String)] = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|r3cyc"
-    val slot = cycleMemo.synchronized {
-      val it = cycleMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = cycleMemo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot[Seq[(String, String)]](() => {
-          val sess = ensureSession(spark, dir)
-          (0 until Replicas).map { r =>
-            val conv = graft.sources.TempDirs.register(
-              java.nio.file.Files.createTempDirectory(
-                s"graft-repair3-conv$r"))
-            def copyAll(from: String): Unit =
-              Option(new java.io.File(from).listFiles())
-                .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
-                .foreach { f =>
-                  java.nio.file.Files.copy(f.toPath,
-                    conv.resolve(f.getName))
-                  ()
-                }
-            copyAll(sess.paths(r)); copyAll(sess.intoDirs(r))
-            (conv.toString, Repair.markDir(conv.toString))
-          }
-        })
-        cycleMemo.put(key, (spark, s))
-        s
+      : Seq[(String, String)] =
+    cycleMemo(spark, s"$dir|r3cyc") {
+      val sess = ensureSession(spark, dir)
+      (0 until Replicas).map { r =>
+        val conv = graft.sources.TempDirs.register(
+          java.nio.file.Files.createTempDirectory(
+            s"graft-repair3-conv$r"))
+        def copyAll(from: String): Unit =
+          Option(new java.io.File(from).listFiles())
+            .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
+            .foreach { f =>
+              java.nio.file.Files.copy(f.toPath,
+                conv.resolve(f.getName))
+              ()
+            }
+        copyAll(sess.paths(r)); copyAll(sess.intoDirs(r))
+        (conv.toString, Repair.markDir(conv.toString))
       }
     }
-    slot.value
-  }
 
   /** q192: the matrix session's CLOSING act — every replica's
     * converged set (own files ∪ its streamed-in sstables) stamped

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** MULTI-SOURCE merge repair (round 15) — the regime the q189 matrix
@@ -46,29 +47,10 @@ object RepairMultiSource {
       pre: Seq[Map[Long, (Long, Long)]], uni: Map[Long, (Long, Long)],
       srcsFor: Map[(Long, Int), Seq[Int]], intoDirs: Seq[String])
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[Session])]()
+  private val memo = new SessionMemo[Session]
 
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
-
-  def ensureSession(spark: SparkSession, dir: String): Session = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|repairMS"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureSession(spark: SparkSession, dir: String): Session =
+    memo(spark, s"$dir|repairMS")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): Session = {
     val paths = (0 until Replicas).map(r =>

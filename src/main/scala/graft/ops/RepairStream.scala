@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** `repair --execute` (round 14) — the ENTIRE anti-entropy cycle run to
@@ -45,14 +45,7 @@ object RepairStream {
   val StreamGenAtoB = 940L
   val StreamGenBtoA = 941L
 
-  private val memo = new java.util.HashMap[String,
-    (SparkSession, Slot[(String, String, String, String)])]()
-
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[(String, String, String, String)]
 
   /** Replica fixture: the base corpus minus the (key+clustering)%97
     * sliver `gap`, as real compressed sstables. */
@@ -63,26 +56,22 @@ object RepairStream {
   private def scanOf(spark: SparkSession, p: String): DataFrame =
     DataDb.cells(spark, p, format = DataDbScan.FormatCassandra)
 
+  /** Second half of q182's 128-bit event id over the identity columns
+    * (the first is their plain xxhash64); the salt LEADS, see
+    * [[roundtrip]] for why. */
+  private[graft] val EidSalt = 0x9e3779b97f4a7c15L
+
+  private[graft] def eventId1(cols: Seq[org.apache.spark.sql.Column]) =
+    xxhash64(lit(EidSalt) +: cols: _*)
+
   private def leafOf(c: org.apache.spark.sql.Column) =
     shiftright(AntiEntropy.token(c), AntiEntropy.TokenLeafShift)
 
   /** Materialize replicas + both streamed sstables; returns
     * (pathA, pathB, streamedIntoA, streamedIntoB), session-memoized. */
   def ensureStreamed(spark: SparkSession, dir: String)
-      : (String, String, String, String) = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|repairx"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      : (String, String, String, String) =
+    memo(spark, s"$dir|repairx")(build(spark, dir))
 
   /** The differing token leaves between two real replica sets —
     * O(leaves) driver rows off two narrow digest aggregates. */
@@ -129,40 +118,25 @@ object RepairStream {
   /** Replica A's converged on-disk set: its own files plus the
     * streamed-in sstable, assembled (the state a node holds when the
     * repair session ends), session-memoized via [[markedA]]. */
-  private val cycleMemo = new java.util.HashMap[String,
-    (SparkSession, Slot[(String, String)])]()
+  private val cycleMemo = new SessionMemo[(String, String)]
 
   /** (converged-but-unmarked A, the same set with every Statistics.db
     * stamped repairedAt) — the repair session's closing act. */
-  def ensureCycle(spark: SparkSession, dir: String): (String, String) = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|repaircyc"
-    val slot = cycleMemo.synchronized {
-      val it = cycleMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = cycleMemo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => {
-          val (pathA, _, intoA, _) = ensureStreamed(spark, dir)
-          val conv = graft.sources.TempDirs.register(
-            java.nio.file.Files.createTempDirectory("graft-repair-conv"))
-          def copyAll(from: String): Unit =
-            Option(new java.io.File(from).listFiles())
-              .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
-              .foreach { f =>
-                java.nio.file.Files.copy(f.toPath, conv.resolve(f.getName))
-                ()
-              }
-          copyAll(pathA); copyAll(intoA)
-          (conv.toString, Repair.markDir(conv.toString))
-        })
-        cycleMemo.put(key, (spark, s))
-        s
-      }
+  def ensureCycle(spark: SparkSession, dir: String): (String, String) =
+    cycleMemo(spark, s"$dir|repaircyc") {
+      val (pathA, _, intoA, _) = ensureStreamed(spark, dir)
+      val conv = graft.sources.TempDirs.register(
+        java.nio.file.Files.createTempDirectory("graft-repair-conv"))
+      def copyAll(from: String): Unit =
+        Option(new java.io.File(from).listFiles())
+          .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
+          .foreach { f =>
+            java.nio.file.Files.copy(f.toPath, conv.resolve(f.getName))
+            ()
+          }
+      copyAll(pathA); copyAll(intoA)
+      (conv.toString, Repair.markDir(conv.toString))
     }
-    slot.value
-  }
 
   /** q184: the repair session's CLOSING act — once the ranges verify
     * (q182), the node stamps repairedAt into every participating
@@ -215,22 +189,36 @@ object RepairStream {
     // the aggregate consumes downstream is (leaf, the h60 digest term,
     // per-source multiplicities) — so each input row is projected,
     // BEFORE the exchange, to 4 longs: the token leaf, a 128-bit event
-    // id (two independently-seeded xxhash64 over all 10 identity
-    // columns), and the digest term hh. Grouping by (leaf, eid128, hh)
-    // instead of the tuple partitions the event space identically
-    // unless two DISTINCT events collide on all 192 bits — P ≈ n²/2^193
-    // with the leaf folded in (≈1e-34 at this corpus, ≈1e-20 at 10^12
-    // events), and a collision would flip the oracle-checked hash, so
-    // the equivalence is verified on every tested SF, not just argued.
-    // hh itself is UNCHANGED (the oracle's digest algebra), and the
-    // per-leaf conditional sums below are bit-identical functions of
-    // the same per-event quantities as before.
+    // id (two xxhash64 over all 10 identity columns) and the digest term
+    // hh. The id's halves are independent only because the salt comes
+    // FIRST in eid1: xxhash64 folds its inputs left to right from one
+    // fixed seed, so a salt appended after the shared 10-column prefix
+    // would make eid1 = xxhash64(salt) seeded with eid0, a function of
+    // eid0 (one eid0 collision would collide both halves). Prepended,
+    // the salt changes the seed the columns fold from, and the halves
+    // are two differently-seeded 64-bit hashes. Grouping by (leaf,
+    // eid0, eid1, hh) instead of the tuple partitions the event space
+    // identically unless two DISTINCT events collide on both 64-bit
+    // halves — P ≈ n²/2^129 from the id alone (≈1e-27 at 10^6 events,
+    // ≈1e-15 at 10^12; hh's ~20 bits and the leaf only lower it), and
+    // a collision would flip the oracle-checked hash, so the
+    // equivalence is verified on every tested SF, not just argued.
+    // The collision model covers random collisions only. xxhash64 and
+    // concat_ws skip NULL inputs without advancing their state, so a
+    // value moving across a NULL in an adjacent same-typed column (say
+    // ttl_s vs local_deletion_time_s) would hash alike under any seed.
+    // That class is ruled out by the columns, not the hash: none of the
+    // ten is nullable in the scan schema (an absent TTL or deletion time
+    // is a sentinel value), and events whose TTL/deletion shape differs
+    // differ in `kind`, `is_tombstone` or `is_expiring`, all of which
+    // are in the id. hh itself is UNCHANGED (the oracle's digest
+    // algebra), and the per-leaf conditional sums below are
+    // bit-identical functions of the same per-event quantities.
     def tag(p: String, src: String): DataFrame =
       scanOf(spark, p).select(
         leafOf(col("key")).as("leaf"),
         xxhash64(eventCols.map(col): _*).as("eid0"),
-        xxhash64(eventCols.map(col) :+
-          lit(0x9e3779b97f4a7c15L): _*).as("eid1"),
+        eventId1(eventCols.map(col)).as("eid1"),
         (graft.functions.PortableHash.h60(concat_ws(":",
           col("key"), col("clustering"), col("column_name"), col("kind"),
           col("timestamp_us"), col("ttl_s"),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbFormat,
   DataDbScan}
 
@@ -76,76 +77,45 @@ object Scrub {
       .getOrElse(Array.empty[java.io.File])
       .map(_.getName.stripSuffix("-Data.db")).sorted.toSeq
 
-  private val memo = new java.util.HashMap[String,
-    (SparkSession, Slot[(String, Long)])]()
+  private val memo = new SessionMemo[(String, Long)]
 
   /** Copy the UNCOMPRESSED base set and overwrite the victim
     * partition's byte range with 0xFF; returns (corrupted dir, victim
     * key). Session-memoized. */
-  def ensureCorrupted(spark: SparkSession, dir: String): (String, Long) = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|corrupt"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot[(String, Long)](() => {
-          val inPath = CassandraDataFixture.ensureFiles(spark, dir,
-            compressed = false)
-          val out = graft.sources.TempDirs.register(
-            java.nio.file.Files.createTempDirectory("graft-scrub-corrupt"))
-          Option(new java.io.File(inPath).listFiles())
-            .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
-            .foreach { f =>
-              java.nio.file.Files.copy(f.toPath, out.resolve(f.getName))
-              ()
-            }
-          val base = s"nb-$VictimGen-big"
-          val parts = indexParts(out.toString, base)
-          val victim = parts.map(_.key).filter(_ % VictimKeyMod == 0L).min
-          val p = parts.find(_.key == victim).get
-          val raf = new java.io.RandomAccessFile(
-            out.resolve(base + "-Data.db").toFile, "rw")
-          try {
-            raf.seek(p.pos)
-            val garbage = Array.fill((p.end - p.pos).toInt)(0xFF.toByte)
-            raf.write(garbage)
-          } finally raf.close()
-          (out.toString, victim)
-        })
-        memo.put(key, (spark, s))
-        s
-      }
+  def ensureCorrupted(spark: SparkSession, dir: String): (String, Long) =
+    memo(spark, s"$dir|corrupt") {
+      val inPath = CassandraDataFixture.ensureFiles(spark, dir,
+        compressed = false)
+      val out = graft.sources.TempDirs.register(
+        java.nio.file.Files.createTempDirectory("graft-scrub-corrupt"))
+      Option(new java.io.File(inPath).listFiles())
+        .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
+        .foreach { f =>
+          java.nio.file.Files.copy(f.toPath, out.resolve(f.getName))
+          ()
+        }
+      val base = s"nb-$VictimGen-big"
+      val parts = indexParts(out.toString, base)
+      val victim = parts.map(_.key).filter(_ % VictimKeyMod == 0L).min
+      val p = parts.find(_.key == victim).get
+      val raf = new java.io.RandomAccessFile(
+        out.resolve(base + "-Data.db").toFile, "rw")
+      try {
+        raf.seek(p.pos)
+        val garbage = Array.fill((p.end - p.pos).toInt)(0xFF.toByte)
+        raf.write(garbage)
+      } finally raf.close()
+      (out.toString, victim)
     }
-    slot.value
-  }
 
-  private val scrubMemo = new java.util.HashMap[String,
-    (SparkSession, Slot[(String, Seq[(Long, Long)])])]()
+  private val scrubMemo = new SessionMemo[(String, Seq[(Long, Long)])]
 
   /** Run the salvage: per-partition isolated decode off the corrupted
     * set, survivors written through the production sink; returns
     * (salvage dir, skipped (gen, key) pairs). Session-memoized. */
   def ensureScrubbed(spark: SparkSession, dir: String)
-      : (String, Seq[(Long, Long)]) = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|scrub"
-    val slot = scrubMemo.synchronized {
-      val it = scrubMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = scrubMemo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot[(String, Seq[(Long, Long)])](() =>
-          build(spark, dir))
-        scrubMemo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      : (String, Seq[(Long, Long)]) =
+    scrubMemo(spark, s"$dir|scrub")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String)
       : (String, Seq[(Long, Long)]) = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
-import graft.sources.{PlanCache, Tables}
+import graft.sources.{PlanCache, SessionMemo, Tables}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -231,38 +231,34 @@ object Similarity {
       col("best.cid").as("cid"), col("best.d2").as("d2"))
 
   /** Session-memoized driver values (k·dim longs per entry — tiny). */
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Long])]]()
+  private val centroidMemo = new SessionMemo[Seq[(Long, Seq[Long])]]
 
   /** The converged (floored-integer) centroids after `iters` Lloyd's
     * rounds; init = the k smallest vec_ids' vectors. Driver-coordinated:
     * one tiny-key aggregate action per round (see [[kmeans]]). */
   private[graft] def kmeansCentroids(spark: SparkSession, dir: String,
-      k: Int = 8, iters: Int = 2): Seq[(Long, Seq[Long])] = {
-    val memoKey = s"${PlanCache.sessionKey(spark)}|$dir|$k|$iters"
-    val hit = centroidMemo.get(memoKey)
-    if (hit != null) return hit
-    GraftFunctions.ensureRegistered(spark)
-    val vecs = quantized(spark, dir).select("vec_id", "qv", "norm2")
-    var centroids: Seq[(Long, Seq[Long])] = vecs.where(col("vec_id") < k)
-      .orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toSeq
-    for (_ <- 1 to iters) {
-      centroids = assignTo(vecs, centroids)
-        .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos")
-        .agg(sum("v").as("s"), count(lit(1)).as("n"))
-        .withColumn("cv", floor(col("s") / col("n")))
-        .groupBy("cid")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), " +
-          "s -> s.cv)").as("cv"))
-        .orderBy("cid")
-        .collect()
+      k: Int = 8, iters: Int = 2): Seq[(Long, Seq[Long])] =
+    centroidMemo(spark, s"$dir|$k|$iters") {
+      GraftFunctions.ensureRegistered(spark)
+      val vecs = quantized(spark, dir).select("vec_id", "qv", "norm2")
+      var centroids: Seq[(Long, Seq[Long])] = vecs.where(col("vec_id") < k)
+        .orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toSeq
+      for (_ <- 1 to iters) {
+        centroids = assignTo(vecs, centroids)
+          .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
+          .groupBy("cid", "pos")
+          .agg(sum("v").as("s"), count(lit(1)).as("n"))
+          .withColumn("cv", floor(col("s") / col("n")))
+          .groupBy("cid")
+          .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), " +
+            "s -> s.cv)").as("cv"))
+          .orderBy("cid")
+          .collect()
+          .map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toSeq
+      }
+      centroids
     }
-    centroidMemo.put(memoKey, centroids)
-    centroids
-  }
 
   def kmeans(spark: SparkSession, dir: String, k: Int = 8, iters: Int = 2)
       : DataFrame = {
@@ -412,25 +408,21 @@ object Similarity {
   /** Session-memoized PERSISTED inverted file: the q89 candidate relation
     * written as bucket-partitioned parquet — the layout a production
     * vector store keeps between queries. */
-  private val ivfIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ivfIndexMemo = new SessionMemo[String]
 
   def ensureIvfIndex(spark: SparkSession, dir: String, nQueries: Int = 8,
-      kCentroids: Int = 8): String = {
-    val key = s"${PlanCache.sessionKey(spark)}|$dir|$nQueries|$kCentroids"
-    val hit = ivfIndexMemo.get(key)
-    if (hit != null) return hit
-    val centroids = kmeansCentroids(spark, dir, kCentroids)
-    val vecs = quantized(spark, dir).select("vec_id", "qv", "norm2")
-    val out = graft.sources.TempDirs.register(
-      java.nio.file.Files.createTempDirectory("graft-ivf-index")).toString
-    assignTo(vecs.where(col("vec_id") >= nQueries), centroids)
-      .select(col("cid").as("bucket"), col("vec_id").as("neighbor_id"),
-        col("qv").as("qb"), col("norm2").as("nb2"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(out)
-    ivfIndexMemo.put(key, out)
-    out
-  }
+      kCentroids: Int = 8): String =
+    ivfIndexMemo(spark, s"$dir|$nQueries|$kCentroids") {
+      val centroids = kmeansCentroids(spark, dir, kCentroids)
+      val vecs = quantized(spark, dir).select("vec_id", "qv", "norm2")
+      val out = graft.sources.TempDirs.register(
+        java.nio.file.Files.createTempDirectory("graft-ivf-index")).toString
+      assignTo(vecs.where(col("vec_id") >= nQueries), centroids)
+        .select(col("cid").as("bucket"), col("vec_id").as("neighbor_id"),
+          col("qv").as("qb"), col("norm2").as("nb2"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(out)
+      out
+    }
 
   /** q118: IVF over the PERSISTED index — build once (bucket-partitioned
     * parquet on disk), query many: the probe relation joins the index on
@@ -510,8 +502,7 @@ object Similarity {
     * KBs). Per-subspace Lloyd's with the exact q88 rules: init = the k
     * smallest vec_ids' subvectors, floored-integer centroid updates, so
     * m=1 degenerates to [[kmeansCentroids]] verbatim (spec-pinned). */
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Int, Seq[(Int, Long, Seq[Long])])]()
+  private val pqMemo = new SessionMemo[(Int, Seq[(Int, Long, Seq[Long])])]
 
   /** The shared per-subspace Lloyd's loop: `sub` must carry
     * (vec_id, s, sv, sn2); q88's exact rules per subspace. */
@@ -540,19 +531,15 @@ object Similarity {
 
   private[graft] def pqCodebooks(spark: SparkSession, dir: String,
       m: Int = 4, k: Int = 8, iters: Int = 2)
-      : (Int, Seq[(Int, Long, Seq[Long])]) = {
-    val memoKey = s"${PlanCache.sessionKey(spark)}|$dir|pq|$m|$k|$iters"
-    val hit = pqMemo.get(memoKey)
-    if (hit != null) return hit
-    GraftFunctions.ensureRegistered(spark)
-    val vecs = quantized(spark, dir).select("vec_id", "qv")
-    val dim = vecs.select(size(col("qv"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val subDim = dim / m
-    val out = (subDim, pqTrain(subVectors(vecs, m, subDim), m, k, iters))
-    pqMemo.put(memoKey, out)
-    out
-  }
+      : (Int, Seq[(Int, Long, Seq[Long])]) =
+    pqMemo(spark, s"$dir|pq|$m|$k|$iters") {
+      GraftFunctions.ensureRegistered(spark)
+      val vecs = quantized(spark, dir).select("vec_id", "qv")
+      val dim = vecs.select(size(col("qv"))).head().getInt(0)
+      require(dim % m == 0, s"dim $dim not divisible by m=$m")
+      val subDim = dim / m
+      (subDim, pqTrain(subVectors(vecs, m, subDim), m, k, iters))
+    }
 
   /** q130: PQ-ADC top-k. Candidates encode narrowly (m argmin folds, all
     * literal centroids); each query's m×k exact distance table is
@@ -697,28 +684,22 @@ object Similarity {
     * k-means; the per-subspace Lloyd's then runs over the residuals of
     * the whole corpus (training set = corpus — deterministic, no
     * sampling), with the exact q88 rules. */
-  private val ivfPqMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Int, Seq[(Int, Long, Seq[Long])])]()
+  private val ivfPqMemo = new SessionMemo[(Int, Seq[(Int, Long, Seq[Long])])]
 
   private[graft] def ivfPqCodebooks(spark: SparkSession, dir: String,
       m: Int = 4, k: Int = 8, kCentroids: Int = 8, iters: Int = 2)
-      : (Int, Seq[(Int, Long, Seq[Long])]) = {
-    val memoKey =
-      s"${PlanCache.sessionKey(spark)}|$dir|ivfpq|$m|$k|$kCentroids|$iters"
-    val hit = ivfPqMemo.get(memoKey)
-    if (hit != null) return hit
-    GraftFunctions.ensureRegistered(spark)
-    val coarse = kmeansCentroids(spark, dir, kCentroids)
-    val vecs = quantized(spark, dir).select("vec_id", "qv", "norm2")
-    val dim = vecs.select(size(col("qv"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val subDim = dim / m
-    val res = residuals(vecs, coarse)
-      .select(col("vec_id"), col("rv").as("qv"))
-    val out = (subDim, pqTrain(subVectors(res, m, subDim), m, k, iters))
-    ivfPqMemo.put(memoKey, out)
-    out
-  }
+      : (Int, Seq[(Int, Long, Seq[Long])]) =
+    ivfPqMemo(spark, s"$dir|ivfpq|$m|$k|$kCentroids|$iters") {
+      GraftFunctions.ensureRegistered(spark)
+      val coarse = kmeansCentroids(spark, dir, kCentroids)
+      val vecs = quantized(spark, dir).select("vec_id", "qv", "norm2")
+      val dim = vecs.select(size(col("qv"))).head().getInt(0)
+      require(dim % m == 0, s"dim $dim not divisible by m=$m")
+      val subDim = dim / m
+      val res = residuals(vecs, coarse)
+        .select(col("vec_id"), col("rv").as("qv"))
+      (subDim, pqTrain(subVectors(res, m, subDim), m, k, iters))
+    }
 
   /** q131: IVF-PQ — the IVFADC composition a production vector store
     * runs at 100 TB (coarse quantizer prunes to nprobe/kCentroids of
@@ -843,24 +824,19 @@ object Similarity {
   /** Session-memoized PERSISTED IVF-PQ index: all a 100 TB corpus keeps
     * hot — (neighbor_id, m code ids) bucket-partitioned by coarse
     * centroid. No floats, no raw vectors: 8 B id + m codes per row. */
-  private val ivfPqIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ivfPqIndexMemo = new SessionMemo[String]
 
   def ensureIvfPqIndex(spark: SparkSession, dir: String, m: Int = 4,
-      k: Int = 8, nQueries: Int = 8, kCentroids: Int = 8): String = {
-    val key =
-      s"${PlanCache.sessionKey(spark)}|$dir|ivfpqidx|$m|$k|$nQueries|$kCentroids"
-    val hit = ivfPqIndexMemo.get(key)
-    if (hit != null) return hit
-    val vecs = quantized(spark, dir).select("vec_id", "qv", "norm2")
-    val out = graft.sources.TempDirs.register(
-      java.nio.file.Files.createTempDirectory("graft-ivfpq-index")).toString
-    ivfPqEncodeQuantized(spark, dir,
-      vecs.where(col("vec_id") >= nQueries), m, k, kCentroids)
-      .write.mode("overwrite").partitionBy("bucket").parquet(out)
-    ivfPqIndexMemo.put(key, out)
-    out
-  }
+      k: Int = 8, nQueries: Int = 8, kCentroids: Int = 8): String =
+    ivfPqIndexMemo(spark, s"$dir|ivfpqidx|$m|$k|$nQueries|$kCentroids") {
+      val vecs = quantized(spark, dir).select("vec_id", "qv", "norm2")
+      val out = graft.sources.TempDirs.register(
+        java.nio.file.Files.createTempDirectory("graft-ivfpq-index")).toString
+      ivfPqEncodeQuantized(spark, dir,
+        vecs.where(col("vec_id") >= nQueries), m, k, kCentroids)
+        .write.mode("overwrite").partitionBy("bucket").parquet(out)
+      out
+    }
 
   /** q132: IVF-PQ over the PERSISTED code index — build once on disk,
     * query many. The probed buckets are driver-known before the scan, so
@@ -885,27 +861,22 @@ object Similarity {
 
   /** Session-memoized per-dimension (min, span) of the candidate vectors —
     * 2·dims longs, the entire SQ8 "model". */
-  private val sq8Memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Long)]]()
+  private val sq8Memo = new SessionMemo[Seq[(Long, Long)]]
 
   /** Per-dim min and span (max−min, floored at 1) over the CANDIDATE
     * vectors, the scalar-quantizer training pass: one narrow posexplode →
     * dims-key aggregate (map-side combined: the exchange carries
     * dims·partitions rows), then an O(dims) collect. */
   private[graft] def sq8MinSpan(spark: SparkSession, dir: String,
-      nQueries: Int = 8): Seq[(Long, Long)] = {
-    val key = s"${PlanCache.sessionKey(spark)}|$dir|sq8|$nQueries"
-    val hit = sq8Memo.get(key)
-    if (hit != null) return hit
-    val mm = quantized(spark, dir).where(col("vec_id") >= nQueries)
-      .select(posexplode(col("qv")).as(Seq("j", "v")))
-      .groupBy("j").agg(min("v").as("mn"), max("v").as("mx"))
-      .orderBy("j").collect()
-      .map(r => (r.getLong(1), math.max(1L, r.getLong(2) - r.getLong(1))))
-      .toSeq
-    sq8Memo.put(key, mm)
-    mm
-  }
+      nQueries: Int = 8): Seq[(Long, Long)] =
+    sq8Memo(spark, s"$dir|sq8|$nQueries") {
+      quantized(spark, dir).where(col("vec_id") >= nQueries)
+        .select(posexplode(col("qv")).as(Seq("j", "v")))
+        .groupBy("j").agg(min("v").as("mn"), max("v").as("mx"))
+        .orderBy("j").collect()
+        .map(r => (r.getLong(1), math.max(1L, r.getLong(2) - r.getLong(1))))
+        .toSeq
+    }
 
   /** q135: SCALAR QUANTIZATION (SQ8) top-k — the third classic
     * vector-compression family next to PQ (q130) and IVF-PQ (q131): each

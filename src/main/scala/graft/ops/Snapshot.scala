@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** `nodetool snapshot` + restore, executed end to end (round 16) —
@@ -30,6 +30,8 @@ import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
   * are ordinary parallel scans of the linked files. */
 object Snapshot {
 
+  private val memo = new SessionMemo[String]
+
   val Tag = "pre-compact"
 
   private val M = 1000003L
@@ -38,7 +40,7 @@ object Snapshot {
   /** Hard-link the live set's components into a snapshot dir
     * (session-memoized). Returns the snapshot dir. */
   def ensureSnapshot(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|snapshot") {
+    memo(spark, s"$dir|snapshot") {
       val live = CassandraDataFixture.ensureFiles(spark, dir,
         compressed = true)
       val snap = graft.sources.TempDirs.register(

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 import graft.sources.statsdb.CassandraStatsFormat
 
@@ -30,27 +31,12 @@ object SstableDowngrade {
 
   private val M = 1000003L
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val memo = new SessionMemo[String]
 
   /** Downgrade the upgraded 'oa' set back to 'nb' under a
     * session-memoized temp dir; returns the downgraded dir. */
-  def ensureDowngraded(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|downgrade"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureDowngraded(spark: SparkSession, dir: String): String =
+    memo(spark, s"$dir|downgrade")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): String = {
     val inPath = SstableUpgrade.ensureUpgraded(spark, dir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** `sstablesplit` (round 14) — Cassandra's oversized-sstable splitter:
@@ -38,14 +39,7 @@ object SstableSplit {
 
   private val ChkMod = 1000003L
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[(String, String)])]()
-
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[(String, String)]
 
   private def inputEvents(spark: SparkSession, inPath: String): DataFrame =
     DataDb.cells(spark, inPath, format = DataDbScan.FormatCassandra)
@@ -69,20 +63,8 @@ object SstableSplit {
 
   /** Split the victim into [[Shards]] real sstables; returns
     * (outputDir, victimId), session-memoized. */
-  def ensureSplit(spark: SparkSession, dir: String): (String, String) = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|split"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureSplit(spark: SparkSession, dir: String): (String, String) =
+    memo(spark, s"$dir|split")(build(spark, dir))
 
   /** Default bucket count of the two-level running sum. */
   val PrefixBuckets = 1024

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 import graft.sources.statsdb.CassandraStatsFormat
 
@@ -64,27 +65,12 @@ object SstableUpgrade {
   def coverageOf(minToken: Long, maxToken: Long): Double =
     (maxToken - minToken + 1L).toDouble / (1L << 60).toDouble
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val memo = new SessionMemo[String]
 
   /** Upgrade the compressed base set to 'oa' under a session-memoized
     * temp dir; returns the upgraded dir. */
-  def ensureUpgraded(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|upgrade"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureUpgraded(spark: SparkSession, dir: String): String =
+    memo(spark, s"$dir|upgrade")(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): String = {
     val inPath = CassandraDataFixture.ensureFiles(spark, dir,

@@ -6,7 +6,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, CassandraDataFormat}
 import graft.sources.summarydb.SummaryDbFormat
 
@@ -34,6 +34,8 @@ import graft.sources.summarydb.SummaryDbFormat
   * Data.db or Index.db to downsample. */
 object SummaryRedistribution {
 
+  private val memo = new SessionMemo[String]
+
   /** Levels under the oracle: 0 (identity anchor), 1 and 2 (halve,
     * quarter the resident entries). */
   val Levels: Seq[Int] = Seq(0, 1, 2)
@@ -56,7 +58,7 @@ object SummaryRedistribution {
     * the probe run exercises the same path at every level. */
   def ensureDownsampled(spark: SparkSession, dir: String,
       level: Int): String =
-    OpMemo.memoized(spark, s"$dir|sumredist$level") {
+    memo(spark, s"$dir|sumredist$level") {
       val src = java.nio.file.Paths.get(
         CassandraDataFixture.ensureFiles(spark, dir, compressed = true))
       val out = graft.sources.TempDirs.register(

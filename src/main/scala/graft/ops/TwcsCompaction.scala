@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** TIME-WINDOW compaction, executed end to end (round 15) — the third
@@ -92,14 +92,7 @@ object TwcsCompaction {
       single.flatMap(_._2.map(_.sstableId)).sorted)
   }
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
-
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[String]
 
   private def inputEvents(spark: SparkSession, inPath: String): DataFrame =
     DataDb.cells(spark, inPath, format = DataDbScan.FormatCassandra)
@@ -111,21 +104,8 @@ object TwcsCompaction {
     * the output dir (session-memoized). Dropped files are not scanned;
     * blocked and single-window files pass through untouched. */
   def ensureCompacted(spark: SparkSession, dir: String,
-      gcBeforeS: Long = Fixtures.GcBeforeS): String = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|twcs|$gcBeforeS"
-    val slot = memo.synchronized {
-      sweep()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir, gcBeforeS))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      gcBeforeS: Long = Fixtures.GcBeforeS): String =
+    memo(spark, s"$dir|twcs|$gcBeforeS")(build(spark, dir, gcBeforeS))
 
   private def build(spark: SparkSession, dir: String,
       gcBeforeS: Long): String = {
@@ -244,50 +224,34 @@ object TwcsCompaction {
       .orderBy("sstable_id")
   }
 
-  private val reingestMemo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val reingestMemo = new SessionMemo[String]
 
   /** Assemble the POST-compaction on-disk state: merged window outputs
     * + passthrough originals + the blocked survivor; the dropped file
     * is GONE. Session-memoized. */
   def ensureReingestState(spark: SparkSession, dir: String,
-      gcBeforeS: Long = Fixtures.GcBeforeS): String = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|twcsre|$gcBeforeS"
-    val slot = reingestMemo.synchronized {
-      val it = reingestMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = reingestMemo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => {
-          val inPath = CassandraDataFixture.ensureTwcsExecFiles(spark, dir)
-          val outPath = ensureCompacted(spark, dir, gcBeforeS)
-          val p = plan(inPath, gcBeforeS)
-          val keepGens = (p.singles ++ p.blocked)
-            .map(id => s"nb-${id.stripPrefix("sst-").toLong + 1}-big")
-            .toSet
-          val state = graft.sources.TempDirs.register(
-            java.nio.file.Files.createTempDirectory("graft-twcs-reingest"))
-          def copyAll(from: String, keep: String => Boolean): Unit =
-            Option(new java.io.File(from).listFiles())
-              .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
-              .filter(f => keep(f.getName)).foreach { f =>
-                java.nio.file.Files.copy(f.toPath,
-                  state.resolve(f.getName))
-                ()
-              }
-          copyAll(outPath, _ => true)
-          copyAll(inPath, n => keepGens.exists(n.startsWith))
-          state.toString
-        })
-        reingestMemo.put(key, (spark, s))
-        s
-      }
+      gcBeforeS: Long = Fixtures.GcBeforeS): String =
+    reingestMemo(spark, s"$dir|twcsre|$gcBeforeS") {
+      val inPath = CassandraDataFixture.ensureTwcsExecFiles(spark, dir)
+      val outPath = ensureCompacted(spark, dir, gcBeforeS)
+      val p = plan(inPath, gcBeforeS)
+      val keepGens = (p.singles ++ p.blocked)
+        .map(id => s"nb-${id.stripPrefix("sst-").toLong + 1}-big")
+        .toSet
+      val state = graft.sources.TempDirs.register(
+        java.nio.file.Files.createTempDirectory("graft-twcs-reingest"))
+      def copyAll(from: String, keep: String => Boolean): Unit =
+        Option(new java.io.File(from).listFiles())
+          .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
+          .filter(f => keep(f.getName)).foreach { f =>
+            java.nio.file.Files.copy(f.toPath,
+              state.resolve(f.getName))
+            ()
+          }
+      copyAll(outPath, _ => true)
+      copyAll(inPath, n => keepGens.exists(n.startsWith))
+      state.toString
     }
-    slot.value
-  }
 
   /** q191: TWCS RE-INGESTION (q186/q175's time-window twin) — the
     * compacted state re-enters the strategy's own decision table off

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** TWCS with IN-WINDOW STCS composition, executed end to end (round 16,
@@ -78,6 +78,8 @@ object TwcsStcsCompaction {
         (regexp_extract(col("sstable_id"), "nb-(\\d+)-big", 1)
           .cast("long") - 1L).cast("string")))
 
+  private val planMemo = new SessionMemo[Plan]
+
   /** Windows from sidecar metadata, tiers from one narrow pruned
     * aggregate — O(#files) driver rows each. Session-memoized (round
     * 19, MinorCompaction.tierTable's discipline): build + roundtrip
@@ -85,8 +87,7 @@ object TwcsStcsCompaction {
     * set, so the tier aggregate's job runs once per session instead of
     * once per q197 bench window. */
   def plan(spark: SparkSession, inPath: String): Plan =
-    OpMemo.memoizedValue(spark, s"$inPath|twcsstcs-plan")(
-      computePlan(spark, inPath))
+    planMemo(spark, s"$inPath|twcsstcs-plan")(computePlan(spark, inPath))
 
   private def computePlan(spark: SparkSession, inPath: String): Plan = {
     val metas = ExpiredBlockers.metadata(inPath)
@@ -108,29 +109,13 @@ object TwcsStcsCompaction {
       single.flatMap(_._2).sorted)
   }
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val memo = new SessionMemo[String]
 
   /** Merge each selected (window, tier) group into one real sstable;
     * returns the output dir (session-memoized). */
   def ensureCompacted(spark: SparkSession, dir: String,
-      gcBeforeS: Long = Fixtures.GcBeforeS): String = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|twcsst|$gcBeforeS"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir, gcBeforeS))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      gcBeforeS: Long = Fixtures.GcBeforeS): String =
+    memo(spark, s"$dir|twcsst|$gcBeforeS")(build(spark, dir, gcBeforeS))
 
   private def build(spark: SparkSession, dir: String,
       gcBeforeS: Long): String = {

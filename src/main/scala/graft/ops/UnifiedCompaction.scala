@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo}
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** UNIFIED compaction (Cassandra 5's UnifiedCompactionStrategy, CEP-26),
@@ -106,6 +106,8 @@ object UnifiedCompaction {
         (regexp_extract(col("sstable_id"), "nb-(\\d+)-big", 1)
           .cast("long") - 1L).cast("string")))
 
+  private val planMemo = new SessionMemo[Plan]
+
   /** Levels from one narrow pruned aggregate (bytes + token span per
     * sstable), selection entirely on the O(#files) driver rows.
     * Session-memoized (round 19, MinorCompaction.tierTable's
@@ -114,8 +116,7 @@ object UnifiedCompaction {
     * density aggregate's job runs once per (session, input dir) instead
     * of once per q206/q210/q211 bench window. */
   def plan(spark: SparkSession, inPath: String): Plan =
-    OpMemo.memoizedValue(spark, s"$inPath|ucs-plan")(
-      computePlan(spark, inPath))
+    planMemo(spark, s"$inPath|ucs-plan")(computePlan(spark, inPath))
 
   private def computePlan(spark: SparkSession, inPath: String): Plan = {
     val agg = inputEvents(spark, inPath)
@@ -180,29 +181,13 @@ object UnifiedCompaction {
       .orderBy("sstable_id")
   }
 
-  private val memo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val memo = new SessionMemo[String]
 
   /** Merge each selected group into shard-aligned real sstables;
     * returns the output dir (session-memoized). */
   def ensureCompacted(spark: SparkSession, dir: String,
-      gcBeforeS: Long = Fixtures.GcBeforeS): String = {
-    val key =
-      s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|ucs|$gcBeforeS"
-    val slot = memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = memo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => build(spark, dir, gcBeforeS))
-        memo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+      gcBeforeS: Long = Fixtures.GcBeforeS): String =
+    memo(spark, s"$dir|ucs|$gcBeforeS")(build(spark, dir, gcBeforeS))
 
   private def build(spark: SparkSession, dir: String,
       gcBeforeS: Long): String = {
@@ -277,28 +262,13 @@ object UnifiedCompaction {
         sum(when(col("is_expiring"), 1L).otherwise(0L)).as("expiring"),
         sum(col("size_bytes") % ChkMod).as("value_sum"))
 
-  private val stateMemo =
-    new java.util.HashMap[String, (SparkSession, Slot[String])]()
+  private val stateMemo = new SessionMemo[String]
 
   /** The post-compaction UCS state as one real directory: the merge
     * outputs plus the untouched passthrough originals (file manifest —
     * byte copies, no data work). Session-memoized. */
-  def ensureReingestState(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|ucsre"
-    val slot = stateMemo.synchronized {
-      val it = stateMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val hit = stateMemo.get(key)
-      if (hit != null) hit._2
-      else {
-        val s = new Slot(() => buildState(spark, dir))
-        stateMemo.put(key, (spark, s))
-        s
-      }
-    }
-    slot.value
-  }
+  def ensureReingestState(spark: SparkSession, dir: String): String =
+    stateMemo(spark, s"$dir|ucsre")(buildState(spark, dir))
 
   private def buildState(spark: SparkSession, dir: String): String = {
     val inPath = CassandraDataFixture.ensureUcsFiles(spark, dir)

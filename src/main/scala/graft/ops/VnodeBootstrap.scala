@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{DataDb, DataDbScan}
 
 /** Vnode BOOTSTRAP — the range-SPLITTING half of the pending-ranges
@@ -37,6 +38,10 @@ import graft.sources.datadb.{DataDb, DataDbScan}
   * walk is O(#tokens²) driver arithmetic, streams are sstable_id-pruned
   * scans of the pre-join files through the sink, digests narrow. */
 object VnodeBootstrap {
+
+  private val memo = new SessionMemo[String]
+  private val planMemo =
+    new SessionMemo[Seq[(Long, Long, Set[Long], Set[Long], String)]]
 
   /** The joining node's id (the ring had nodes 0–3). */
   val Joiner = 4
@@ -92,7 +97,7 @@ object VnodeBootstrap {
     * REAL vnode-load files; one received sstable per source node under
     * the returned dir (session-memoized). */
   def ensureBootstrapped(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|vnodeboot") {
+    memo(spark, s"$dir|vnodeboot") {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-vnodeboot")).toString
       import spark.implicits._
@@ -185,7 +190,7 @@ object VnodeBootstrap {
     * maintains on every node and entire-sstable streaming needs
     * (session-memoized). */
   def ensureSlicedHoldings(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|vnodeslice") {
+    memo(spark, s"$dir|vnodeslice") {
       val loaded = VnodeRing.ensureLoaded(spark, dir)
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-vnodeslice")).toString
@@ -216,8 +221,7 @@ object VnodeBootstrap {
     * window. */
   def zeroCopyPlan(spark: SparkSession, dir: String)
       : Seq[(Long, Long, Set[Long], Set[Long], String)] =
-    OpMemo.memoizedValue(spark, s"$dir|vnodezcplan")(
-      computeZeroCopyPlan(spark, dir))
+    planMemo(spark, s"$dir|vnodezcplan")(computeZeroCopyPlan(spark, dir))
 
   private def computeZeroCopyPlan(spark: SparkSession, dir: String)
       : Seq[(Long, Long, Set[Long], Set[Long], String)] = {
@@ -263,7 +267,7 @@ object VnodeBootstrap {
     * touched); partial files rewrite only their requested halves
     * through the real sink, one received sstable per source node. */
   def ensureZeroCopyBootstrapped(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|vnodezc") {
+    memo(spark, s"$dir|vnodezc") {
       val sliced = ensureSlicedHoldings(spark, dir)
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-vnodezcrecv"))

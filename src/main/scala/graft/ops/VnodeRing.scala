@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** The topology family at VNODE granularity (round 17, VERDICT r16 ask
@@ -48,6 +49,8 @@ import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
   * broadcast table (O(#tokens × RF) rows — 256 vnodes × 1000 nodes ×
   * RF=3 is still sub-megabyte). */
 object VnodeRing {
+
+  private val memo = new SessionMemo[String]
 
   /** Ring nodes. */
   val Nodes = 4
@@ -157,7 +160,7 @@ object VnodeRing {
   /** Stream the corpus into the vnode ring: one real received sstable
     * per node under the returned dir (session-memoized). */
   def ensureLoaded(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|vnodeload") {
+    memo(spark, s"$dir|vnodeload") {
       val inPath = CassandraDataFixture.ensureUcsFiles(spark, dir)
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-vnodeload")).toString
@@ -180,7 +183,7 @@ object VnodeRing {
     * Source is the leaver's OWN file — decommission is the cooperative
     * departure; the id filter prunes the scan to that single file. */
   def ensureDecommissioned(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|vnodedecom") {
+    memo(spark, s"$dir|vnodedecom") {
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-vnodedecom")).toString
       import spark.implicits._

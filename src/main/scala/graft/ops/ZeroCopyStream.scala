@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SessionMemo
 import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
 
 /** Entire-sstable (zero-copy) streaming (round 17, VERDICT r16 ask
@@ -41,6 +42,8 @@ import graft.sources.datadb.{CassandraDataFixture, DataDb, DataDbScan}
   * touching a single row); the rewrite path is the ordinary pruned
   * scan + clustered sink exchange for only the partial remainder. */
 object ZeroCopyStream {
+
+  private val memo = new SessionMemo[String]
 
   /** Sixteenth ranges, as [[VnodeRing]]: token div 2^56. */
   val SlotShift: Int = VnodeRing.SlotShift
@@ -88,7 +91,7 @@ object ZeroCopyStream {
 
   /** Restage the corpus as the range-sliced set (session-memoized). */
   def ensureSliced(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|zcslice") {
+    memo(spark, s"$dir|zcslice") {
       val inPath = CassandraDataFixture.ensureUcsFiles(spark, dir)
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-zcslice")).toString
@@ -143,7 +146,7 @@ object ZeroCopyStream {
     * covered files hard-link every component; partial files rewrite
     * their requested ranges through the sink. */
   def ensureStreamed(spark: SparkSession, dir: String): String =
-    OpMemo.memoized(spark, s"$dir|zcstream") {
+    memo(spark, s"$dir|zcstream") {
       val sliced = ensureSliced(spark, dir)
       val out = graft.sources.TempDirs.register(
         java.nio.file.Files.createTempDirectory("graft-zcrecv"))

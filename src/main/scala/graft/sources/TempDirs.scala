@@ -31,6 +31,19 @@ object TempDirs {
   /** Register `dir` for deletion at JVM exit; returns it for chaining. */
   def register(dir: Path): Path = { registered.add(dir); dir }
 
+  /** A registered temp dir named `prefix…`, filled by `write`. A failed
+    * write deletes the half-written tree before rethrowing, so it is
+    * neither memoized nor left behind. Returns the dir's path. */
+  def fill(prefix: String)(write: Path => Unit): String = {
+    val out = register(Files.createTempDirectory(prefix))
+    try write(out)
+    catch { case t: Throwable => deleteTree(out); throw t }
+    out.toString
+  }
+
+  /** The `onDrop` of the session memos whose values are fixture dirs. */
+  def deleteDir(dir: String): Unit = deleteTree(java.nio.file.Paths.get(dir))
+
   /** Best-effort recursive delete (also used by fixture failure paths). */
   def deleteTree(root: Path): Unit = {
     val f = root.toFile

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo, TempDirs}
 
 /** Materializes the SAME logical partition index as
   * [[graft.sources.indexdb.IndexDbFixture]] (lineitem pscan: 8-byte
@@ -15,40 +15,11 @@ import graft.sources.Fixtures
   * Memoization/cleanup contract mirrors the other fixture writers. */
 object BtiFixture {
 
-  private val memo = new java.util.HashMap[String, (SparkSession, String)]()
+  private val memo = new SessionMemo[String](TempDirs.deleteDir)
 
-  private def sweepStopped(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue._1.sparkContext.isStopped) {
-        val root = new java.io.File(e.getValue._2)
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        it.remove()
-      }
-    }
-  }
-
-  def ensureFiles(spark: SparkSession, dir: String): String = memo.synchronized {
-    sweepStopped()
-    val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir"
-    val hit = memo.get(k)
-    if (hit != null) return hit._2
-    val out = graft.sources.TempDirs.register(
-      Files.createTempDirectory("graft-bti-fixture"))
-    try writeAll(spark, dir, out)
-    catch {
-      case t: Throwable =>
-        val root = out.toFile
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        throw t
-    }
-    val path = out.toString
-    memo.put(k, (spark, path))
-    path
-  }
+  def ensureFiles(spark: SparkSession, dir: String): String =
+    memo(spark, dir)(
+      TempDirs.fill("graft-bti-fixture")(writeAll(spark, dir, _)))
 
   private def writeAll(spark: SparkSession, dir: String, out: Path): Unit = {
     val rows = Fixtures.liPscan(spark, dir)

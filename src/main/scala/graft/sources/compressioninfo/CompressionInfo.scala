@@ -1,7 +1,7 @@
 package graft.sources.compressioninfo
 
 import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream, FileOutputStream}
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo, TempDirs}
 
 /** The REAL Cassandra CompressionInfo.db component — the chunk-offset map
   * that turns a logical (uncompressed) Data.db position into a compressed
@@ -322,40 +322,11 @@ object CassandraCompressionFixture {
 
   val ChunkLength = 65536
 
-  private val memo = new java.util.HashMap[String, (SparkSession, String)]()
+  private val memo = new SessionMemo[String](TempDirs.deleteDir)
 
-  private def sweepStopped(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue._1.sparkContext.isStopped) {
-        val root = new java.io.File(e.getValue._2)
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        it.remove()
-      }
-    }
-  }
-
-  def ensureFiles(spark: SparkSession, dir: String): String = memo.synchronized {
-    sweepStopped()
-    val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir"
-    val hit = memo.get(k)
-    if (hit != null) return hit._2
-    val out = graft.sources.TempDirs.register(
-      Files.createTempDirectory("graft-compinfo-fixture"))
-    try writeAll(spark, dir, out)
-    catch {
-      case t: Throwable =>
-        val root = out.toFile
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        throw t
-    }
-    val path = out.toString
-    memo.put(k, (spark, path))
-    path
-  }
+  def ensureFiles(spark: SparkSession, dir: String): String =
+    memo(spark, dir)(
+      TempDirs.fill("graft-compinfo-fixture")(writeAll(spark, dir, _)))
 
   private def writeAll(spark: SparkSession, dir: String, out: Path): Unit = {
     val rows = Fixtures.sstableMeta(Fixtures.allPscan(spark, dir))

@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo, TempDirs}
 import graft.sources.compressioninfo.{ChunkedData, CompressionInfoFormat, Compressors}
 import graft.sources.statsdb.CassandraStatsFormat
 import CassandraDataFormat._
@@ -63,20 +63,7 @@ object CassandraDataFixture {
         s"${Marshal.Prefix}BytesType)")
   }
 
-  private val memo = new java.util.HashMap[String, (SparkSession, String)]()
-
-  private def sweepStopped(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue._1.sparkContext.isStopped) {
-        val root = new java.io.File(e.getValue._2)
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        it.remove()
-      }
-    }
-  }
+  private val memo = new SessionMemo[String](TempDirs.deleteDir)
 
   def ensureFiles(spark: SparkSession, dir: String,
       compressed: Boolean): String =
@@ -367,26 +354,9 @@ object CassandraDataFixture {
         org.apache.spark.sql.Column] = None,
       frameOverride: Option[org.apache.spark.sql.DataFrame] = None,
       levelFor: Long => Int = _ => 0): String =
-    memo.synchronized {
-    sweepStopped()
-    val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|$tag"
-    val hit = memo.get(k)
-    if (hit != null) return hit._2
-    val out = graft.sources.TempDirs.register(
-      Files.createTempDirectory("graft-cassdata-fixture"))
-    try writeAll(spark, dir, out, codecFor, remap, reassign,
-      frameOverride, levelFor)
-    catch {
-      case t: Throwable =>
-        val root = out.toFile
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        throw t
-    }
-    val path = out.toString
-    memo.put(k, (spark, path))
-    path
-  }
+    memo(spark, s"$dir|$tag")(
+      TempDirs.fill("graft-cassdata-fixture")(writeAll(spark, dir, _, codecFor,
+        remap, reassign, frameOverride, levelFor)))
 
   /** Deterministic value blob: length `sizeBytes % 61`, contents a mix of
     * repetition (compressible) and position-dependent bytes (not
@@ -933,25 +903,9 @@ object CassandraDataFixture {
     regularColumns = FeatureRegulars)
 
   def ensureFeatureFiles(spark: SparkSession, dir: String): String =
-    memo.synchronized {
-      sweepStopped()
-      val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|features"
-      val hit = memo.get(k)
-      if (hit != null) return hit._2
-      val out = graft.sources.TempDirs.register(
-        Files.createTempDirectory("graft-cassfeature-fixture"))
-      try writeFeatureAll(spark, dir, out)
-      catch {
-        case t: Throwable =>
-          val root = out.toFile
-          Option(root.listFiles()).foreach(_.foreach(_.delete()))
-          root.delete()
-          throw t
-      }
-      val path = out.toString
-      memo.put(k, (spark, path))
-      path
-    }
+    memo(spark, s"$dir|features")(
+      TempDirs.fill("graft-cassfeature-fixture")(
+        writeFeatureAll(spark, dir, _)))
 
   private def blobOf(len: Long, seed: Long): Array[Byte] = {
     val b = new Array[Byte](len.toInt)
@@ -1283,25 +1237,9 @@ object CassandraDataFixture {
     regularColumns = StaticComplexRegulars)
 
   def ensureStaticComplexFiles(spark: SparkSession, dir: String): String =
-    memo.synchronized {
-      sweepStopped()
-      val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|staticcomplex"
-      val hit = memo.get(k)
-      if (hit != null) return hit._2
-      val out = graft.sources.TempDirs.register(
-        Files.createTempDirectory("graft-cassstatic-fixture"))
-      try writeStaticComplexAll(spark, dir, out)
-      catch {
-        case t: Throwable =>
-          val root = out.toFile
-          Option(root.listFiles()).foreach(_.foreach(_.delete()))
-          root.delete()
-          throw t
-      }
-      val path = out.toString
-      memo.put(k, (spark, path))
-      path
-    }
+    memo(spark, s"$dir|staticcomplex")(
+      TempDirs.fill("graft-cassstatic-fixture")(
+        writeStaticComplexAll(spark, dir, _)))
 
   private def writeStaticComplexAll(spark: SparkSession, dir: String,
       out: Path): Unit = {

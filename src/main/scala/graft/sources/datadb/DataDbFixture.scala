@@ -1,12 +1,12 @@
 package graft.sources.datadb
 
 import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream}
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo, TempDirs}
 
 /** Materializes the lineitem cell-event fixture as REAL binary Data.db
   * files (DataDbFormat), so the DataSource V2 path is exercised — and
@@ -24,44 +24,11 @@ import graft.sources.Fixtures
   * not query execution. */
 object DataDbFixture {
 
-  private val memo = new java.util.HashMap[String, (SparkSession, String)]()
+  private val memo = new SessionMemo[String](TempDirs.deleteDir)
 
-  /** Drop entries of stopped sessions and delete their temp trees — keyed by
-    * sessionUUID (identity hash codes can collide across session lifetimes
-    * in one JVM and would serve a dead session's path to a new session). */
-  private def sweepStopped(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue._1.sparkContext.isStopped) {
-        val root = new java.io.File(e.getValue._2)
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        it.remove()
-      }
-    }
-  }
-
-  def ensureFiles(spark: SparkSession, dir: String): String = memo.synchronized {
-    sweepStopped()
-    val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir"
-    val hit = memo.get(k)
-    if (hit != null) return hit._2
-    val out = graft.sources.TempDirs.register(
-      Files.createTempDirectory("graft-datadb-fixture"))
-    // a half-written tree is never memoized NOR left behind: delete on failure
-    try writeAll(spark, dir, out)
-    catch {
-      case t: Throwable =>
-        val root = out.toFile
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        throw t
-    }
-    val path = out.toString
-    memo.put(k, (spark, path))
-    path
-  }
+  def ensureFiles(spark: SparkSession, dir: String): String =
+    memo(spark, dir)(
+      TempDirs.fill("graft-datadb-fixture")(writeAll(spark, dir, _)))
 
   /** Each Data.db gets a companion Index.db sidecar whose positions are the
     * REAL byte offsets of the partition blocks (what Cassandra's partition

@@ -1,12 +1,12 @@
 package graft.sources.indexdb
 
 import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream}
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo, TempDirs}
 
 /** Materializes the lineitem partition-index fixture as REAL binary Index.db
   * files (IndexDbFormat), so the DataSource V2 path can be exercised — and
@@ -22,23 +22,7 @@ import graft.sources.Fixtures
   * not query execution. */
 object IndexDbFixture {
 
-  private val memo = new java.util.HashMap[String, (SparkSession, String)]()
-
-  /** Drop entries of stopped sessions and delete their temp trees — keyed by
-    * sessionUUID (identity hash codes can collide across session lifetimes
-    * in one JVM and would serve a dead session's path to a new session). */
-  private def sweepStopped(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue._1.sparkContext.isStopped) {
-        val root = new java.io.File(e.getValue._2)
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        it.remove()
-      }
-    }
-  }
+  private val memo = new SessionMemo[String](TempDirs.deleteDir)
 
   def ensureFiles(spark: SparkSession, dir: String): String =
     ensure(spark, s"long|$dir")(writeAll(spark, dir, _))
@@ -53,26 +37,8 @@ object IndexDbFixture {
     ensure(spark, s"typed|$dir")(writeTyped(spark, dir, _))
 
   private def ensure(spark: SparkSession, key: String)(
-      write: Path => Unit): String = memo.synchronized {
-    sweepStopped()
-    val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$key"
-    val hit = memo.get(k)
-    if (hit != null) return hit._2
-    val out = graft.sources.TempDirs.register(
-      Files.createTempDirectory("graft-indexdb-fixture"))
-    // a half-written tree is never memoized NOR left behind: delete on failure
-    try write(out)
-    catch {
-      case t: Throwable =>
-        val root = out.toFile
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        throw t
-    }
-    val path = out.toString
-    memo.put(k, (spark, path))
-    path
-  }
+      write: Path => Unit): String =
+    memo(spark, key)(TempDirs.fill("graft-indexdb-fixture")(write))
 
   private def writeAll(spark: SparkSession, dir: String, out: Path): Unit = {
     val rows = Fixtures.liPscan(spark, dir)

@@ -1,11 +1,11 @@
 package graft.sources.statsdb
 
 import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream}
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, SessionMemo, TempDirs}
 
 /** Materializes the sstable_meta fixture (lineitem AND orders sstables) as
   * REAL binary Statistics.db files (StatsDbFormat), so the DataSource V2
@@ -18,44 +18,11 @@ import graft.sources.Fixtures
   * execution — and there is exactly one tiny file per sstable. */
 object StatsDbFixture {
 
-  private val memo = new java.util.HashMap[String, (SparkSession, String)]()
+  private val memo = new SessionMemo[String](TempDirs.deleteDir)
 
-  /** Drop entries of stopped sessions and delete their temp trees — keyed by
-    * sessionUUID (identity hash codes can collide across session lifetimes
-    * in one JVM and would serve a dead session's path to a new session). */
-  private def sweepStopped(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue._1.sparkContext.isStopped) {
-        val root = new java.io.File(e.getValue._2)
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        it.remove()
-      }
-    }
-  }
-
-  def ensureFiles(spark: SparkSession, dir: String): String = memo.synchronized {
-    sweepStopped()
-    val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir"
-    val hit = memo.get(k)
-    if (hit != null) return hit._2
-    val out = graft.sources.TempDirs.register(
-      Files.createTempDirectory("graft-statsdb-fixture"))
-    // a half-written tree is never memoized NOR left behind: delete on failure
-    try writeAll(spark, dir, out)
-    catch {
-      case t: Throwable =>
-        val root = out.toFile
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        throw t
-    }
-    val path = out.toString
-    memo.put(k, (spark, path))
-    path
-  }
+  def ensureFiles(spark: SparkSession, dir: String): String =
+    memo(spark, dir)(
+      TempDirs.fill("graft-statsdb-fixture")(writeAll(spark, dir, _)))
 
   private def writeAll(spark: SparkSession, dir: String, out: Path): Unit = {
     val rows = Fixtures.sstableMeta(Fixtures.allPscan(spark, dir)).collect()
@@ -120,20 +87,7 @@ object StatsDbFixture {
   */
 object CassandraStatsFixture {
 
-  private val memo = new java.util.HashMap[String, (SparkSession, String)]()
-
-  private def sweepStopped(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue._1.sparkContext.isStopped) {
-        val root = new java.io.File(e.getValue._2)
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        it.remove()
-      }
-    }
-  }
+  private val memo = new SessionMemo[String](TempDirs.deleteDir)
 
   def ensureFiles(spark: SparkSession, dir: String): String =
     ensure(spark, dir, "nb")
@@ -145,25 +99,10 @@ object CassandraStatsFixture {
     ensure(spark, dir, "oa")
 
   private def ensure(spark: SparkSession, dir: String,
-      version: String): String = memo.synchronized {
-    sweepStopped()
-    val k = s"${graft.sources.PlanCache.sessionKey(spark)}|$dir|$version"
-    val hit = memo.get(k)
-    if (hit != null) return hit._2
-    val out = graft.sources.TempDirs.register(
-      Files.createTempDirectory("graft-cassstats-fixture"))
-    try writeAll(spark, dir, out, version)
-    catch {
-      case t: Throwable =>
-        val root = out.toFile
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete()
-        throw t
-    }
-    val path = out.toString
-    memo.put(k, (spark, path))
-    path
-  }
+      version: String): String =
+    memo(spark, s"$dir|$version")(
+      TempDirs.fill("graft-cassstats-fixture")(
+        writeAll(spark, dir, _, version)))
 
   private def writeAll(spark: SparkSession, dir: String, out: Path,
       version: String): Unit = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.{SessionMemo, TempDirs}
+
 /** Structured Streaming extension (SURVEY §7 M6c): cfstats-style rolling
   * counters and windowed rollups over the events stream. The reference is
   * batch-only; this is the capability add for continuous ingest — same
@@ -437,8 +439,7 @@ object StreamingStats {
 
   private val ddRuns = new java.util.concurrent.atomic.AtomicLong()
 
-  private val stageMemo =
-    new java.util.HashMap[String, (SparkSession, String)]()
+  private val stageMemo = new SessionMemo[String]
 
   /** Session-memoized staged ingest directory for the controlled-
     * arrival replays (q198/q208): the staging writes are FIXTURE setup
@@ -448,21 +449,7 @@ object StreamingStats {
     * (fresh sink, fresh state store) over the staged files. */
   private def stagedDir(spark: SparkSession, key: String)(
       build: java.nio.file.Path => Unit): String =
-    stageMemo.synchronized {
-      val it = stageMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val full = s"${graft.sources.PlanCache.sessionKey(spark)}|$key"
-      val hit = stageMemo.get(full)
-      if (hit != null) hit._2
-      else {
-        val ingest = graft.sources.TempDirs.register(
-          java.nio.file.Files.createTempDirectory("graft-stream-stage"))
-        build(ingest)
-        stageMemo.put(full, (spark, ingest.toString))
-        ingest.toString
-      }
-    }
+    stageMemo(spark, key)(TempDirs.fill("graft-stream-stage")(build))
 
   /** Write `batches` into `ingest` as one parquet file each, with
     * ascending names AND mtimes (FileStreamSource's (mtime, path)

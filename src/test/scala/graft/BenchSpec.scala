@@ -178,6 +178,26 @@ class BenchSpec extends AnyFunSuite {
     assert(log.claimEmit() && !log.claimEmit())
   }
 
+  test("record emission: emitRecord prints the compact line, then the " +
+      "full record (the one carrying \"queries\":{) LAST, exactly once") {
+    val log = new Bench.RunLog(3300.0, System.nanoTime(), None)
+    log.nqTotal = 1
+    log.record("q_a", (1.5, 0.0, 0.0, 0.0), 2)
+    val out = new java.io.ByteArrayOutputStream()
+    val (first, second) = Console.withOut(out) {
+      (Bench.emitRecord(log, Map("q_a" -> 1.0), Map.empty,
+        refApplies = true, sfDir = "/x/sf0.1"),
+        Bench.emitRecord(log, Map("q_a" -> 1.0), Map.empty,
+          refApplies = true, sfDir = "/x/sf0.1"))
+    }
+    assert(first && !second)
+    val lines = out.toString("UTF-8").split("\n").toSeq
+    assert(lines.size === 2)
+    assert(!lines.head.contains("\"queries\":{"))
+    assert(lines.last.contains("\"queries\":{"))
+    assert(Bench.parseRefMap(lines.last, "queries") === Map("q_a" -> 1.5))
+  }
+
   test("wall budget (round 19): shouldStart refuses new measurements " +
       "past StopFrac of the budget and latches the truncated stamp; " +
       "retryAllowed caps contention-retry spend at RetryFrac") {
